@@ -5,9 +5,11 @@ Re-expresses the reference's ``jsonsToSchema`` fold (upstream
 unifySchemas``) as idiomatic Spark:
 
 1.  ``df.mapInArrow`` — Arrow record batches cross the JVM→Python boundary
-    once; inside, generation (G1-G5) + unification (U0-U8) run per batch and
-    fold to ONE draft-schema accumulator per partition.  Output: a tiny
-    DataFrame of (draft json, doc count) — one row per non-empty partition.
+    once; inside, each batch yields one draft (columnar fast path, or the
+    fused ``schema_algebra`` accumulator that does generation G1-G5 and
+    unification U0-U8 in one walk per document), and the batch drafts unify
+    to ONE draft per partition.  Output: a tiny DataFrame of (draft json,
+    doc count) — one row per non-empty partition.
 2.  ``RDD.treeAggregate`` over those partials — a logarithmic merge tree so
     the driver never sees more than a handful of accumulators at once.  Legal
     because unify is associative + commutative (property-tested); this is the
@@ -41,8 +43,10 @@ from ..schema_algebra import (
     SchemaGenerationConfig,
     DEFAULT_CONFIG,
     Schema,
+    SchemaNode,
+    absorb,
     canonical_json,
-    json_to_schema,
+    finish,
     parse_schema,
     unify,
     unify_opt,
@@ -161,13 +165,13 @@ def _batch_to_draft_struct(batch: pa.RecordBatch, config: SchemaGenerationConfig
 
 
 # ---------------------------------------------------------------------------
-# JSON front-end batch accumulation
+# JSON front-end batch accumulation — two kernels, one batch draft
 #
 # Fast path: the whole Arrow batch of JSON strings is parsed in ONE
 # pyarrow.json C++ call (newline-joined — raw newlines are illegal inside
 # JSON strings, so the join is unambiguous) and the batch draft is derived
-# columnar-ly.  The fast path BAILS to the per-document Python fold whenever
-# Arrow's column-level inference would lose per-document information:
+# columnar-ly.  The fast path BAILS whenever Arrow's column-level inference
+# would lose per-document information:
 #
 # * any null anywhere — Arrow cannot distinguish a literal ``null`` value
 #   (type "null", key present/required) from an absent key (not required);
@@ -177,15 +181,22 @@ def _batch_to_draft_struct(batch: pa.RecordBatch, config: SchemaGenerationConfig
 # What it CAN recover exactly: integer-vs-number per G2 is a property of the
 # VALUE (7.0 → integer, PINNED), so a float64 column classifies by whole-
 # column integrality masks; empty arrays are fine because U4 keeps the
-# present side's ``items``.  Byte-equality with the Python fold is asserted
-# in tests/test_infer_fastpath.py on crafted + randomized documents.
+# present side's ``items``.
+#
+# Fallback: ``json.loads`` per document, each absorbed into ONE
+# ``schema_algebra.SchemaNode`` per batch (the fused accumulator), finished
+# to a dict once.  ``unify`` only combines finished drafts: batch drafts
+# within a partition, then partition drafts in ``_tree_merge``.  The
+# reference two-step fold ``schemas_to_schema(map(json_to_schema, docs))``
+# is the oracle both kernels are held to, as canonical JSON, in
+# tests/test_infer_fastpath.py on crafted + randomized documents.
 # ---------------------------------------------------------------------------
 
 def _json_arrow_value_draft(
     arr, config: SchemaGenerationConfig
 ) -> Optional[Schema]:
     """Draft for one parsed-JSON Arrow column; None = outside the fast path
-    (caller falls back to the Python fold)."""
+    (caller falls back to the per-document accumulator)."""
     import numpy as np
 
     if isinstance(arr, pa.ChunkedArray):
@@ -248,7 +259,7 @@ def _fast_json_batch_draft(
     texts, config: SchemaGenerationConfig
 ) -> Optional[tuple[Schema, int]]:
     """One C++ parse + columnar draft for a batch of JSON document strings;
-    None = use the Python per-document fold."""
+    None = use the per-document accumulator."""
     import io
 
     from pyarrow import json as pj
@@ -296,7 +307,7 @@ def _batch_to_draft_json(
     fast = _fast_json_batch_draft(texts, config)
     if fast is not None:
         return fast
-    acc: Optional[Schema] = None
+    node = SchemaNode()
     n = 0
     for s in texts.to_pylist():
         try:
@@ -308,9 +319,9 @@ def _batch_to_draft_json(
                 f"malformed JSON document (set on_error='skip' to drop): "
                 f"{s[:120]!r} — {exc}"
             ) from None
-        acc = unify_opt(acc, json_to_schema(doc, config))
+        absorb(node, doc, config)
         n += 1
-    return acc, n
+    return (finish(node, config) if n else None), n
 
 
 # ---------------------------------------------------------------------------
@@ -491,25 +502,10 @@ def infer_grouped(
         raise ValueError(f"on_error must be 'fail' or 'skip', got {on_error!r}")
 
     def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        texts = pa.array(pdf[json_col].dropna(), type=pa.string())
-        fast = _fast_json_batch_draft(texts, config)
-        if fast is not None:
-            acc, n = fast
-        else:
-            acc = None
-            n = 0
-            for s in texts.to_pylist():
-                try:
-                    v = json.loads(s)
-                except json.JSONDecodeError as exc:
-                    if on_error == "skip":
-                        continue
-                    raise ValueError(
-                        "malformed JSON document (set on_error='skip' to "
-                        f"drop): {s[:200]!r}"
-                    ) from exc
-                acc = unify_opt(acc, json_to_schema(v, config))
-                n += 1
+        texts = pa.array(pdf[json_col], type=pa.string())
+        acc, n = _batch_to_draft_json(
+            pa.RecordBatch.from_arrays([texts], [json_col]), json_col, config, on_error
+        )
         return pd.DataFrame(
             {
                 group_col: [pdf[group_col].iloc[0]],

@@ -10,10 +10,19 @@ future session can flip any single decision in one place).
 
 Design constraints that matter for the Spark engine built on top:
 
+*   Two ways to compute ``jsonsToSchema``, one answer.  The accumulator
+    (:class:`SchemaNode`, :func:`absorb`, :func:`finish`) walks each document
+    once into a mutable node per path and builds the schema dict once; it is
+    what :func:`jsons_to_schema` and the engine's per-document JSON fallback
+    run.  The reference fold ``schemas_to_schema(map(json_to_schema, docs))``
+    (generate a dict per document, then ``unify`` pairwise) is kept as the
+    oracle the accumulator is property-tested against, as canonical JSON,
+    under every config.
 *   ``unify`` is **idempotent, commutative and associative** (property-tested in
-    ``tests/test_algebra_laws.py``).  That is the license for folding
-    per-partition draft schemas with ``RDD.treeAggregate`` — partial merges may
-    arrive in any grouping/order and must give a byte-identical result.
+    ``tests/test_algebra_laws.py``).  That is the license for combining
+    finished per-batch and per-partition draft schemas with
+    ``RDD.treeAggregate`` — partial merges may arrive in any grouping/order
+    and must give a byte-identical result.
 *   ``canonical_json`` is a pinned, bit-for-bit stable encoding (sorted keys,
     ``separators=(',', ':')``, no float drift — ints stay ints).  Fixture
     comparison and cross-partition equality checks use this encoding.
@@ -334,8 +343,153 @@ def schemas_to_schema(schemas: Iterable[Schema]) -> Schema:
 def jsons_to_schema(
     values: Iterable[Any], config: SchemaGenerationConfig = DEFAULT_CONFIG
 ) -> Schema:
-    """gen ∘ fold — the reference's flagship ``jsonsToSchema``."""
-    return schemas_to_schema(json_to_schema(v, config) for v in values)
+    """gen ∘ fold — the reference's flagship ``jsonsToSchema``, computed by
+    the fused accumulator (``absorb`` every value, ``finish`` once)."""
+    node = SchemaNode()
+    for v in values:
+        absorb(node, v, config)
+    return finish(node, config)
+
+
+# ---------------------------------------------------------------------------
+# Fused accumulator — generation + unification in one walk per document
+# ---------------------------------------------------------------------------
+#
+# ``schemas_to_schema(json_to_schema(v) for v in values)`` builds a dict per
+# document and merges it into the accumulator.  For generated schemas the
+# fold's result at each path depends only on a few aggregates of the values
+# seen there, so the accumulator keeps exactly those (GenSON's incremental
+# ``SchemaBuilder.add_object`` is the same idea):
+#
+# * U1 type:      the set of type names;
+# * U2 properties: one child node per key seen in a non-empty object;
+# * U3 required:  the key intersection, emptied for good by any value that
+#                 is not a non-empty object (generation gives those no
+#                 ``required``, and an absent side drops the keyword);
+# * U4 items:     one node for every element (default), or one node per
+#                 position (``type_arrays_as_tuples``: zip-unify, the longer
+#                 tail kept);
+# * U5 additionalProperties: ``false`` iff every value was an object, i.e.
+#                 the type set is exactly {"object"} — no separate flag.
+#
+# ``finish`` builds the dict once.  The two-step fold stays as the test
+# oracle (tests/test_algebra_laws.py pins canonical equality under all four
+# configs), and ``unify`` stays the combiner of finished partial schemas.
+
+_REQUIRED_DROPPED = frozenset()
+_SCALAR_TYPE_NAMES = {
+    str: "string",
+    int: "integer",
+    bool: "boolean",
+    type(None): "null",
+}
+
+
+class SchemaNode:
+    """Mutable accumulator for every value seen at one document path."""
+
+    __slots__ = ("types", "properties", "required", "items")
+
+    def __init__(self) -> None:
+        self.types: set = set()
+        self.properties: Optional[dict] = None  # key -> SchemaNode
+        self.required: Optional[set] = None  # None until the first value
+        self.items = None  # SchemaNode, or list of SchemaNode (tuples)
+
+
+def absorb(
+    node: SchemaNode, value: Any, config: SchemaGenerationConfig = DEFAULT_CONFIG
+) -> None:
+    """Fold one JSON value into ``node`` (G1–G5 and U0–U5 in one walk)."""
+    t = type(value)
+    if t is dict:
+        _absorb_object(node, value, config)
+        return
+    if t is list:
+        _absorb_array(node, value, config)
+        return
+    name = _SCALAR_TYPE_NAMES.get(t)
+    if name is None:
+        if t is float:
+            name = "integer" if value.is_integer() else "number"
+        elif isinstance(value, dict):
+            _absorb_object(node, value, config)
+            return
+        elif isinstance(value, (list, tuple)):
+            _absorb_array(node, value, config)
+            return
+        else:  # subclasses of scalar types; TypeError for non-JSON values
+            name = json_to_schema(value)["type"]
+    node.types.add(name)
+    node.required = _REQUIRED_DROPPED
+
+
+def _absorb_object(node: SchemaNode, obj: dict, config: SchemaGenerationConfig) -> None:
+    node.types.add("object")
+    if not obj:
+        node.required = _REQUIRED_DROPPED
+        return
+    props = node.properties
+    if props is None:
+        props = node.properties = {}
+    for k, v in obj.items():
+        child = props.get(k)
+        if child is None:
+            child = props[k] = SchemaNode()
+        absorb(child, v, config)
+    req = node.required
+    if req is None:
+        node.required = set(obj)
+    elif req:
+        req.intersection_update(obj)
+
+
+def _absorb_array(node: SchemaNode, arr, config: SchemaGenerationConfig) -> None:
+    node.types.add("array")
+    node.required = _REQUIRED_DROPPED
+    if not arr:
+        return
+    if config.type_arrays_as_tuples:
+        items = node.items
+        if items is None:
+            items = node.items = []
+        while len(items) < len(arr):
+            items.append(SchemaNode())
+        for child, v in zip(items, arr):
+            absorb(child, v, config)
+        return
+    items = node.items
+    if items is None:
+        items = node.items = SchemaNode()
+    for v in arr:
+        absorb(items, v, config)
+
+
+def finish(node: SchemaNode, config: SchemaGenerationConfig = DEFAULT_CONFIG) -> Schema:
+    """The Draft-4 schema of everything absorbed into ``node``."""
+    types = node.types
+    if not types:
+        raise ValueError("jsons_to_schema: empty input (reference takes NonEmpty)")
+    schema: Schema = {
+        "type": next(iter(types)) if len(types) == 1
+        else [t for t in _TYPE_ORDER if t in types]
+    }
+    if node.properties is not None:
+        schema["properties"] = {
+            k: finish(child, config) for k, child in node.properties.items()
+        }
+    if node.required:
+        schema["required"] = sorted(node.required)
+    items = node.items
+    if items is not None:
+        schema["items"] = (
+            [finish(child, config) for child in items]
+            if isinstance(items, list)
+            else finish(items, config)
+        )
+    if config.seal_object_properties and types == {"object"}:
+        schema["additionalProperties"] = False
+    return schema
 
 
 # ---------------------------------------------------------------------------

@@ -43,10 +43,32 @@ ENGINE_CONF = {
     "spark.executor.extraJavaOptions": "-XX:+UseG1GC -XX:NewRatio=1",
 }
 
+
+def _default_cpus() -> int:
+    """The cores in this process's affinity mask (what taskset/cpusets allow)."""
+    try:
+        return len(os.sched_getaffinity(0))
+    except AttributeError:  # no sched_getaffinity outside Linux
+        return os.cpu_count() or 1
+
+
+def _default_driver_mem() -> str:
+    """min(24g, half of physical RAM): the heap grows lazily, so a 24g cap on
+    a 16 GB host lets the JVM outgrow the machine and be OOM-killed."""
+    try:
+        with open("/proc/meminfo") as f:
+            total_kb = next(
+                int(line.split()[1]) for line in f if line.startswith("MemTotal:")
+            )
+    except (OSError, StopIteration, ValueError):
+        return "24g"
+    return f"{min(24 * 1024, total_kb // 2048)}m"
+
+
 # Single local JVM hosts driver+executors: size its heap for real scans.
 # Only effective for the FIRST session in a process (JVM flags are fixed at
 # launch) — bench runs each measurement in its own subprocess for this reason.
-DRIVER_MEM = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g")
+DRIVER_MEM = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem()
 
 
 def get_spark(
@@ -57,11 +79,12 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with engine defaults.
 
-    master defaults to local[$SPARK_GRAFT_CPUS] (driver convention).
+    master defaults to local[$SPARK_GRAFT_CPUS], and SPARK_GRAFT_CPUS to
+    the cores this process may run on.
     shuffle_partitions defaults to the core count — right-sized for local
     runs; a real cluster sets this to ~2-3x total cores via spark-submit.
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or _default_cpus())
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:

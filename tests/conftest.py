@@ -8,5 +8,5 @@ SF_ORACLE = "/root/testdata/sf0.01"
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(master="local[8]", shuffle_partitions=8, app_name="tests")
+    s = get_spark(app_name="tests")
     yield s

@@ -9,11 +9,15 @@ legal at any partitioning (BASELINE.json:6 "associative schema-merge lattice").
 
 import json
 
+import pytest
 from hypothesis import given, settings, strategies as st
 
 from jsons_to_schema_spark.schema_algebra import (
     SchemaGenerationConfig,
+    SchemaNode,
+    absorb,
     canonical_json,
+    finish,
     json_to_schema,
     jsons_to_schema,
     schemas_to_schema,
@@ -33,14 +37,13 @@ json_values = st.recursive(
     max_leaves=12,
 )
 
-configs = st.sampled_from(
-    [
-        SchemaGenerationConfig(),
-        SchemaGenerationConfig(type_arrays_as_tuples=True),
-        SchemaGenerationConfig(seal_object_properties=True),
-        SchemaGenerationConfig(type_arrays_as_tuples=True, seal_object_properties=True),
-    ]
-)
+ALL_CONFIGS = [
+    SchemaGenerationConfig(),
+    SchemaGenerationConfig(type_arrays_as_tuples=True),
+    SchemaGenerationConfig(seal_object_properties=True),
+    SchemaGenerationConfig(type_arrays_as_tuples=True, seal_object_properties=True),
+]
+configs = st.sampled_from(ALL_CONFIGS)
 
 
 def c(schema):
@@ -165,3 +168,67 @@ def test_doc_level_upper_bound_law(A, B):
     merged = jsons_to_schema(A + B)
     for d in A + B:
         assert not validate(d, merged), (d, merged)
+
+
+# ---------------------------------------------------------------------------
+# The fused accumulator (absorb/finish) against the reference fold
+# ---------------------------------------------------------------------------
+
+def _accumulated(docs, cfg):
+    node = SchemaNode()
+    for d in docs:
+        absorb(node, d, cfg)
+    return finish(node, cfg)
+
+
+def _reference(docs, cfg):
+    return schemas_to_schema(json_to_schema(d, cfg) for d in docs)
+
+
+@settings(max_examples=400, deadline=None)
+@given(st.lists(json_values, min_size=1, max_size=8), configs)
+def test_accumulator_equals_reference_fold(docs, cfg):
+    assert c(_accumulated(docs, cfg)) == c(_reference(docs, cfg))
+
+
+ACCUMULATOR_CASES = {
+    "null_next_to_value": [{"a": None}, {"a": 1}, None, {"a": "s"}],
+    "int_valued_float": [{"a": 7.0}, {"a": 7}, {"b": [7.0, 2.5]}],
+    "empty_object_top": [{}, {"a": 1}],
+    "empty_array_top": [[], [1]],
+    "empty_nested": [{"o": {}, "xs": []}, {"o": {"b": 1}, "xs": [[], [{}]]}],
+    "optional_key": [{"a": 1, "b": 2}, {"a": 3}, {"a": 4, "c": True}],
+    "mixed_scalar_types": [{"a": 1}, {"a": "s"}, {"a": 2.5}, {"a": False}],
+    "object_against_scalar": [{"a": {"x": 1}}, {"a": 3}, {"a": {"x": 2}}],
+    "object_against_array": [{"a": {"x": 1}}, {"a": [{"x": 1}]}],
+    "arrays_of_objects": [{"xs": [{"a": 1}, {"a": 2, "b": "s"}]}, {"xs": [{"a": None}]}],
+    "tuples_unequal_length": [[1, "s"], [2], [3.5, "t", None], []],
+    "top_level_scalars": [1, "s", True, None, 2.5],
+    "top_level_arrays": [[1, 2], ["a"], [[1], {"k": 1}]],
+    "top_level_object_and_scalar": [{"k": 1}, 3, {"k": 2}],
+    "python_tuples": [(1, "s"), {"t": (True, None)}, [2.5]],
+}
+
+
+@pytest.mark.parametrize("cfg", ALL_CONFIGS, ids=["default", "tuple", "seal", "tuple_seal"])
+@pytest.mark.parametrize("docs", ACCUMULATOR_CASES.values(), ids=ACCUMULATOR_CASES.keys())
+def test_accumulator_corner_cases(docs, cfg):
+    assert c(_accumulated(docs, cfg)) == c(_reference(docs, cfg))
+
+
+def test_accumulator_pins_the_corner_semantics():
+    assert _accumulated([7.0], SchemaGenerationConfig()) == {"type": "integer"}
+    # a scalar at an object path drops required there, keeps properties
+    s = _accumulated(ACCUMULATOR_CASES["object_against_scalar"], SchemaGenerationConfig())
+    a = s["properties"]["a"]
+    assert a["type"] == ["integer", "object"] and "required" not in a
+    assert a["properties"] == {"x": {"type": "integer"}}
+    # sealed only where every value was an object
+    sealed = SchemaGenerationConfig(seal_object_properties=True)
+    s = _accumulated([{"a": {}}, {"a": 1}], sealed)
+    assert s["additionalProperties"] is False
+    assert "additionalProperties" not in s["properties"]["a"]
+    with pytest.raises(ValueError, match="NonEmpty"):
+        finish(SchemaNode())
+    with pytest.raises(TypeError, match="not a JSON value"):
+        absorb(SchemaNode(), {"a": object()})
