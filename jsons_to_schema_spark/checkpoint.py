@@ -2,11 +2,23 @@
 from checkpoint with per-partition lineage + metrics").
 
 Key design decision (SURVEY.md §4.3): merge state is keyed by **content split
-id** — the input file path from ``_metadata.file_path`` — NEVER by
-``spark_partition_id()``, which is unstable across runs/AQE re-plans.  At
-scale the split id is the Iceberg data-file path; locally it is the parquet
-part file.  One state record per split holds the split's draft schema, row
-counts, per-check failure counts and timing — the lineage/metrics table.
+id** — the input file path, normalized by ``validate.split_of`` /
+``validate.split_column`` — NEVER by ``spark_partition_id()``, which is
+unstable across runs/AQE re-plans.  At scale the split id is the Iceberg
+data-file path; locally it is the parquet part file.  One state record per
+split holds the split's draft schema, row counts, per-check failure counts and
+timing — the lineage/metrics table.
+
+A resume cycle reads each data file once and a no-op reads none:
+
+* splits are listed from the file index (``DataFrame.inputFiles()``), not by
+  scanning rows, so an empty part file is a split too;
+* pending = listed splits minus the state's ``split`` column, and only the
+  pending files are read (an ``isin`` on the file-path metadata column, which
+  Spark prunes at file level);
+* one fold over the state table yields the done-set, the unified schema, the
+  counters and the lineage — before computing (a no-op answers from it) and
+  again only after a commit.
 
 Commit protocol (TableStateStore): the state is a TABLE of split records —
 immutable parquet snapshots plus monotonic exclusive-create ``commit-N``
@@ -26,7 +38,6 @@ lineage/metrics table (read it with spark.read.parquet).
 from __future__ import annotations
 
 import functools
-import hashlib
 import os
 import time
 from pathlib import Path
@@ -36,9 +47,10 @@ import pyarrow as pa
 
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
-from .operators.infer import _arrow_struct_to_draft, _tree_merge
-from .operators.validate import ROW_CHECKS, split_column, with_check_flags
+from .operators.infer import _arrow_struct_to_draft
+from .operators.validate import ROW_CHECKS, split_column, split_of, with_check_flags
 from .schema_algebra import (
     DEFAULT_CONFIG,
     Schema,
@@ -49,9 +61,13 @@ from .schema_algebra import (
 
 SPLIT_COL = "_split"
 
-
-def _split_key(split_path: str) -> str:
-    return hashlib.sha256(split_path.encode()).hexdigest()[:24]
+# one state record per split: what _per_split_records_df emits and the
+# zero-row record an empty part file commits
+_RECORD_SCHEMA = pa.schema(
+    [("split", pa.string()), ("draft", pa.string()), ("n_rows", pa.int64())]
+    + [(f"fail_{c}", pa.int64()) for c in ROW_CHECKS]
+)
+_RECORD_STRUCT = from_arrow_schema(_RECORD_SCHEMA)
 
 
 class TableStateStore:
@@ -68,12 +84,8 @@ class TableStateStore:
         """Current committed version: the max exclusive-create ``commit-N``
         marker (monotonic by construction — a stalled writer's LATE marker
         for an old N can never roll the store back, unlike a mutable
-        pointer file).  A legacy ``VERSION`` pointer file is honored as a
-        floor for state dirs written by the previous protocol."""
+        pointer file)."""
         best = 0
-        vfile = self.dir / "VERSION"
-        if vfile.exists():
-            best = int(vfile.read_text().strip())
         for p in self.dir.glob("commit-*"):
             try:
                 best = max(best, int(p.name.split("-", 1)[1]))
@@ -230,8 +242,9 @@ class TableStateStore:
         writer's batch rather than losing it; the marker create is
         idempotent between adopter and a late original writer.
 
-        Migration note: this store reads only ``snap-*.parquet`` + VERSION;
-        a state dir from the pre-r2 JSON-file-per-split format is ignored
+        Migration note: this store reads only ``snap-*.parquet`` +
+        ``commit-N`` markers; a state dir from the pre-r2
+        JSON-file-per-split format is ignored
         (treated as empty → those splits recompute once, then commit here).
         """
         if not records:
@@ -290,25 +303,12 @@ class TableStateStore:
         return removed
 
 
-# Backwards-compatible alias (the JSON-dir store this replaced).
-SplitStateStore = TableStateStore
-
-
-def _fold_split_factory(check_names: list[str], config=DEFAULT_CONFIG):
+def _fold_split_factory(config=DEFAULT_CONFIG):
     import pyarrow.compute as pc
-
-    out_fields = (
-        [("split", pa.string()), ("draft", pa.string()), ("n_rows", pa.int64())]
-        + [(f"fail_{c}", pa.int64()) for c in check_names]
-    )
-    out_schema = pa.schema(out_fields)
-    ddl = "split string, draft string, n_rows long, " + ", ".join(
-        f"fail_{c} long" for c in check_names
-    )
 
     def fold(table: pa.Table) -> pa.Table:
         split = table.column(SPLIT_COL)[0].as_py()
-        flag_cols = {f"ok_{c}" for c in check_names}
+        flag_cols = {f"ok_{c}" for c in ROW_CHECKS}
         data_cols = [
             c for c in table.column_names
             if c != SPLIT_COL and c not in flag_cols
@@ -322,22 +322,23 @@ def _fold_split_factory(check_names: list[str], config=DEFAULT_CONFIG):
             "draft": [canonical_json(draft)],
             "n_rows": [table.num_rows],
         }
-        for c in check_names:
+        for c in ROW_CHECKS:
             # fail = flag is exactly False; a null flag (check not evaluable)
             # is NOT a violation — same convention as the native path's
             # sum((~ok).cast(long)) and validate.row_violations' filter.
             is_fail = pc.fill_null(pc.invert(table.column(f"ok_{c}")), False)
             row[f"fail_{c}"] = [pc.sum(pc.cast(is_fail, pa.int64())).as_py() or 0]
-        return pa.Table.from_pydict(row, schema=out_schema)
+        return pa.Table.from_pydict(row, schema=_RECORD_SCHEMA)
 
-    return fold, ddl
+    return fold
 
 
 def _per_split_records_df(df: DataFrame, flagged: DataFrame) -> DataFrame:
-    """One (split, draft, n_rows, per-check fails) row per pending split —
-    AS A DATAFRAME, finalized on executors, never collected (r4, VERDICT
-    item 2: at 10^6 splits the old collect() put GBs of KB-scale drafts on
-    the driver).
+    """One (split, draft, n_rows, per-check fails) row per split present in
+    ``flagged`` — AS A DATAFRAME, finalized on executors, never collected
+    (r4, VERDICT item 2: at 10^6 splits the old collect() put GBs of
+    KB-scale drafts on the driver).  A split with no rows (an empty part
+    file) yields no record; checkpointed_validate commits those itself.
 
     Preferred engine: ONE groupBy(split) over the scan with the codegen
     inference aggregates + fail counts — map-side partial aggregation means
@@ -355,31 +356,27 @@ def _per_split_records_df(df: DataFrame, flagged: DataFrame) -> DataFrame:
         finalize_agg_row,
     )
 
-    check_names = list(ROW_CHECKS)
     data_cols = [c for c in df.columns if c != SPLIT_COL]
     try:
         plan = NativeInferencePlan(df.select(*data_cols))
         if plan.explode_aggs:
             raise UnsupportedSchema("float-element arrays need explode jobs")
     except UnsupportedSchema:
-        fold, out_ddl = _fold_split_factory(check_names)
-        # the fold's output ddl already names the key column "split"
+        # _RECORD_STRUCT already names the key column "split"
         return (
-            flagged.repartition(SPLIT_COL).groupBy(SPLIT_COL).applyInArrow(fold, out_ddl)
+            flagged.repartition(SPLIT_COL)
+            .groupBy(SPLIT_COL)
+            .applyInArrow(_fold_split_factory(), _RECORD_STRUCT)
         )
 
     aggs = list(plan.builder.exprs)
-    for c in check_names:
+    for c in ROW_CHECKS:
         aggs.append(F.sum((~F.col(f"ok_{c}")).cast("long")).alias(f"fail_{c}"))
     projected = plan.builder.project(
-        flagged, F.col(SPLIT_COL), *[F.col(f"ok_{c}") for c in check_names]
+        flagged, F.col(SPLIT_COL), *[F.col(f"ok_{c}") for c in ROW_CHECKS]
     )
     grouped = projected.groupBy(SPLIT_COL).agg(*aggs)
     specs, n_alias, config = plan.portable_finalizer()
-    out_cols = ["split", "draft", "n_rows"] + [f"fail_{c}" for c in check_names]
-    out_ddl = "split string, draft string, n_rows long, " + ", ".join(
-        f"fail_{c} long" for c in check_names
-    )
 
     def finalize_batches(batches):
         import pandas as pd
@@ -399,12 +396,78 @@ def _per_split_records_df(df: DataFrame, flagged: DataFrame) -> DataFrame:
                     "draft": canonical_json(schema),
                     "n_rows": int(n_rows),
                 }
-                for c in check_names:
+                for c in ROW_CHECKS:
                     out[f"fail_{c}"] = int(rec.get(f"fail_{c}") or 0)
                 rows.append(out)
-            yield pd.DataFrame(rows, columns=out_cols)
+            yield pd.DataFrame(rows, columns=_RECORD_SCHEMA.names)
 
-    return grouped.mapInPandas(finalize_batches, out_ddl)
+    return grouped.mapInPandas(finalize_batches, _RECORD_STRUCT)
+
+
+def _fold_state(state_df: Optional[DataFrame]) -> dict:
+    """The whole answer from ONE pass over the state table: a mapInArrow
+    folds each partition's rows into one row (unified draft, n_rows,
+    n_splits, fail sums, lineage list) and the driver combines the
+    per-partition rows of one collect.  Null drafts (zero-row splits) add
+    lineage but no schema."""
+    fails = {c: 0 for c in ROW_CHECKS}
+    if state_df is None:
+        return {"schema": None, "n_rows": 0, "fails": fails,
+                "splits_committed": 0, "lineage": []}
+    fail_cols = [f"fail_{c}" for c in ROW_CHECKS if f"fail_{c}" in state_df.columns]
+    lineage_type = pa.list_(
+        pa.struct([("split", pa.string()), ("n_rows", pa.int64()), ("passed", pa.bool_())])
+    )
+    out_schema = pa.schema(
+        [("draft", pa.string()), ("n_rows", pa.int64()), ("n_splits", pa.int64())]
+        + [(c, pa.int64()) for c in fail_cols]
+        + [("lineage", lineage_type)]
+    )
+
+    def fold(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        acc: Optional[Schema] = None
+        out = {"n_rows": 0, **{c: 0 for c in fail_cols}}
+        lineage = []
+        for batch in batches:
+            for rec in batch.to_pylist():
+                if rec["draft"] is not None:
+                    acc = unify_opt(acc, parse_schema(rec["draft"]))
+                n_rows = rec["n_rows"] or 0
+                out["n_rows"] += n_rows
+                passed = True
+                for c in fail_cols:
+                    out[c] += rec[c] or 0
+                    passed = passed and not rec[c]
+                lineage.append(
+                    {"split": rec["split"], "n_rows": n_rows, "passed": passed}
+                )
+        out["draft"] = None if acc is None else canonical_json(acc)
+        out["n_splits"] = len(lineage)
+        out["lineage"] = lineage
+        yield pa.RecordBatch.from_pylist([out], schema=out_schema)
+
+    parts = (
+        state_df.select("split", "draft", "n_rows", *fail_cols)
+        .mapInArrow(fold, from_arrow_schema(out_schema))
+        .collect()
+    )
+    schema: Optional[Schema] = None
+    for p in parts:
+        if p["draft"] is not None:
+            schema = unify_opt(schema, parse_schema(p["draft"]))
+    for c in fail_cols:
+        fails[c.removeprefix("fail_")] = sum(p[c] for p in parts)
+    lineage = sorted(
+        (rec.asDict() for p in parts for rec in p["lineage"]),
+        key=lambda rec: rec["split"],
+    )
+    return {
+        "schema": schema,
+        "n_rows": sum(p["n_rows"] for p in parts),
+        "fails": fails,
+        "splits_committed": sum(p["n_splits"] for p in parts),
+        "lineage": lineage,
+    }
 
 
 def checkpointed_validate(
@@ -417,20 +480,26 @@ def checkpointed_validate(
 ) -> dict:
     """Schema-infer + constraint-validate the spans table, resumably.
 
-    Every stage is Spark-side (r4, VERDICT item 2 — no driver
-    materialization of splits, records, or drafts):
+    A cycle reads each data file once and a no-op reads none; no stage
+    materializes records or drafts on the driver (r4, VERDICT item 2):
 
-    1. pending splits = distinct(split) LEFT ANTI JOIN state table;
-    2. per pending split: draft schema + per-check failure counts in ONE
-       groupBy(split) codegen aggregate (map-side partials; Arrow-fold
-       fallback for exotic schemas), finalized to draft JSON by a
-       mapInPandas carrying only pickle-safe alias trees — see
-       _per_split_records_df;
-    3. commit the batch as ONE MERGE-shaped snapshot written by executors
-       (store.merge_df; Iceberg deployment = a real distributed MERGE INTO);
-    4. final answer = infer._tree_merge over the committed drafts + one
-       aggregate over the state table; the driver receives (schema,
-       counters) and a 3-narrow-column lineage summary only.
+    1. splits = the file index's ``inputFiles()``, normalized by
+       ``validate.split_of`` — a listing, not a scan; empty part files are
+       splits too;
+    2. one pass over the state table (``_fold_state``) gives the done-set
+       and the answer; pending = listed splits minus the done-set, in
+       sorted order (the first ``max_splits`` of them).  Nothing pending:
+       return that answer;
+    3. read only the pending files (an ``isin`` on the file-path metadata
+       column, which prunes files) and build draft schema + per-check
+       failure counts per split in ONE groupBy(split) codegen aggregate
+       (map-side partials; Arrow-fold fallback for exotic schemas),
+       finalized to draft JSON by a mapInPandas carrying only pickle-safe
+       alias trees — see _per_split_records_df.  A pending split that
+       yields no row gets a zero-row record (null draft);
+    4. commit the batch as ONE MERGE-shaped snapshot written by executors
+       (store.merge_df; Iceberg deployment = a real distributed MERGE
+       INTO), then fold the state once more for the answer.
 
     ``max_splits`` lets tests simulate a kill after K splits.  ``store``
     overrides the default parquet-snapshot TableStateStore with any object
@@ -442,8 +511,9 @@ def checkpointed_validate(
     accumulate versions × table-size bytes over a long campaign; stores
     without the method ignore the option (Iceberg retention is the
     catalog's expire_snapshots procedure).
-    Returns {"schema", "n_rows", "fails", "splits_total",
-    "splits_committed", "splits_computed_this_run", "lineage"}.
+    Returns {"schema", "n_rows", "fails", "splits_total" (input files,
+    empty ones included), "splits_committed", "splits_computed_this_run",
+    "lineage", "lineage_df"}.
     """
     if store is None:
         store = TableStateStore(state_dir)
@@ -464,42 +534,29 @@ def checkpointed_validate(
             return None
         return spark_.createDataFrame([Row(**rec) for rec in done.values()])
 
-    # same normalized full-path key as validate.split_column() — one split
-    # identity across verdicts, oracles, and the state store (ADVICE r2).
-    df = spark.read.parquet(data_path).withColumn(SPLIT_COL, split_column())
-
-    # -- pending enumeration: Spark-side left-anti join (r4, VERDICT item 2;
-    # the old distinct().collect() put 10^6 split ids on the driver and
-    # broadcast them back inside an isin()).  The distinct is a
-    # column-pruned scan of the file-path metadata column only; persist it —
-    # the anti-join AND splits_total both read it, and at 10^6 splits the
-    # file-listing scan should run once, not twice (r4 review).
-    splits = df.select(F.col(SPLIT_COL).alias("split")).distinct().persist()
-    splits_total = int(splits.count())
+    base = spark.read.parquet(data_path)
+    splits = sorted({split_of(uri) for uri in base.inputFiles()})
     state_df = _state_df(spark)
-    if state_df is None:
-        pending_df = splits
-    else:
-        pending_df = splits.join(state_df.select("split"), "split", "left_anti")
-    if max_splits is not None:  # test knob: simulate a kill after K splits
-        pending_df = pending_df.orderBy("split").limit(max_splits)
-    pending_df = pending_df.persist()
-    computed = int(pending_df.count())
+    answer = _fold_state(state_df)
+    done = {rec["split"] for rec in answer["lineage"]}
+    pending = [s for s in splits if s not in done][:max_splits]
 
-    if computed:
-        # split ids are metadata-scale (one short string per input file) —
-        # broadcast them so the data side never shuffles for this semi-join
-        work = df.join(
-            F.broadcast(pending_df.withColumnRenamed("split", SPLIT_COL)),
-            SPLIT_COL,
-            "left_semi",
-        )
-        flagged = with_check_flags(work)
+    if pending:
+        # same normalized full-path key as split_of() — one split identity
+        # across verdicts, oracles, and the state store (ADVICE r2)
+        df = base.withColumn(SPLIT_COL, split_column())
+        flagged = with_check_flags(df.filter(F.col(SPLIT_COL).isin(pending)))
         records = _per_split_records_df(df, flagged).persist()
         t0 = time.time()
-        computed = int(records.count())  # the heavy aggregation runs HERE
+        # the heavy aggregation runs HERE; only split ids reach the driver
+        emitted = {r["split"] for r in records.select("split").collect()}
         elapsed = time.time() - t0
-        stamped = records.withColumn("committed_at", F.lit(time.time())).withColumn(
+        batch = records
+        empty = [s for s in pending if s not in emitted]
+        if empty:  # zero-row files: commit them, or they stay pending forever
+            zero = [(s, None, 0) + (0,) * len(ROW_CHECKS) for s in empty]
+            batch = batch.unionByName(spark.createDataFrame(zero, _RECORD_STRUCT))
+        stamped = batch.withColumn("committed_at", F.lit(time.time())).withColumn(
             "wall_s_batch", F.lit(round(elapsed, 3))
         )
         if hasattr(store, "merge_df"):
@@ -509,51 +566,26 @@ def checkpointed_validate(
         records.unpersist()
         if expire_keep_last is not None and hasattr(store, "expire_snapshots"):
             store.expire_snapshots(keep_last=expire_keep_last)
-    pending_df.unpersist()
+        state_df = _state_df(spark)
+        answer = _fold_state(state_df)
 
-    # -- final answer, Spark-side: tree-fold the committed drafts
-    # (infer._tree_merge) + one aggregate over the state table; the driver
-    # receives only (schema, counters) and a 3-narrow-column lineage summary.
-    state_df = _state_df(spark)
-    splits.unpersist()
-    fails = {c: 0 for c in ROW_CHECKS}
-    if state_df is None:
-        return {
-            "schema": None,
-            "n_rows": 0,
-            "fails": fails,
-            "splits_total": splits_total,
-            "splits_committed": 0,
-            "splits_computed_this_run": computed,
-            "lineage": [],
-            "lineage_df": None,
-        }
-    fail_cols = [f"fail_{c}" for c in ROW_CHECKS if f"fail_{c}" in state_df.columns]
-    schema, n_rows = _tree_merge(
-        state_df.select(F.col("draft"), F.col("n_rows").alias("n_docs"))
-    )
-    sums = state_df.agg(
-        F.count(F.lit(1)).alias("_n_splits"),
-        *[F.sum(F.coalesce(F.col(c), F.lit(0))).alias(c) for c in fail_cols],
-    ).first()
-    for c in ROW_CHECKS:
-        fails[c] = int(sums[f"fail_{c}"] or 0) if f"fail_{c}" in fail_cols else 0
-    passed = functools.reduce(
-        lambda a, b: a & b,
-        [F.coalesce(F.col(c), F.lit(0)) == 0 for c in fail_cols],
-        F.lit(True),
-    )
-    lineage_df = state_df.select("split", "n_rows", passed.alias("passed"))
+    lineage_df = None
+    if state_df is not None:
+        fail_cols = [
+            f"fail_{c}" for c in ROW_CHECKS if f"fail_{c}" in state_df.columns
+        ]
+        passed = functools.reduce(
+            lambda a, b: a & b,
+            [F.coalesce(F.col(c), F.lit(0)) == 0 for c in fail_cols],
+            F.lit(True),
+        )
+        lineage_df = state_df.select("split", "n_rows", passed.alias("passed"))
     return {
-        "schema": schema,
-        "n_rows": int(n_rows),
-        "fails": fails,
-        "splits_total": splits_total,
-        "splits_committed": int(sums["_n_splits"]),
-        "splits_computed_this_run": computed,
+        **answer,
+        "splits_total": len(splits),
+        "splits_computed_this_run": len(pending),
         # the scalable artifact is lineage_df (a DataFrame over the state
         # table); "lineage" is its 3-narrow-column driver summary, kept for
         # callers that want the list (bounded: no drafts, ~50 B/split)
-        "lineage": [r.asDict() for r in lineage_df.orderBy("split").collect()],
         "lineage_df": lineage_df,
     }

@@ -20,6 +20,7 @@ lives in :func:`validate_json_against_schema`.
 from __future__ import annotations
 
 import json
+import re
 from typing import Iterator, Optional
 
 import pyarrow as pa
@@ -158,6 +159,20 @@ def partition_verdicts(flagged: DataFrame) -> DataFrame:
     return _with_totals(out)
 
 
+# A local ``file:`` scheme prefix, however many slashes follow it.  Java's and
+# Python's regex engines read this pattern the same way, so split_column()
+# (on executors) and split_of() (on the driver) give one split identity.
+_FILE_SCHEME = r"^file:/+"
+
+
+def split_of(uri: str) -> str:
+    """Driver-side twin of :func:`split_column` for one file URI — e.g. an
+    entry of ``DataFrame.inputFiles()``, which reports ``file:///…`` where
+    ``_metadata.file_path`` reports ``file:/…``; both normalize to the same
+    key."""
+    return re.sub(_FILE_SCHEME, "/", uri)
+
+
 def split_column() -> "F.Column":
     """Stable content-split id: the FULL path of the scan's input file, with
     a local ``file:``-scheme prefix normalized away so it string-matches what
@@ -167,9 +182,10 @@ def split_column() -> "F.Column":
     pushdown when projected.  The full path (not the basename — ADVICE r2)
     keeps Hive-partitioned ``date=*/part-00000.parquet`` layouts as distinct
     splits and matches the key the checkpoint store uses (checkpoint.py
-    SPLIT_COL uses this same expression).  Non-local schemes (s3://, hdfs://)
-    pass through as complete URIs — still globally unique."""
-    return F.regexp_replace(F.col("_metadata.file_path"), r"^file:/+", "/")
+    SPLIT_COL uses this same expression, and lists files through
+    :func:`split_of`).  Non-local schemes (s3://, hdfs://) pass through as
+    complete URIs — still globally unique."""
+    return F.regexp_replace(F.col("_metadata.file_path"), _FILE_SCHEME, "/")
 
 
 def split_verdicts(spans_df: DataFrame) -> DataFrame:

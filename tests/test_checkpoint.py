@@ -334,3 +334,91 @@ def test_checkpointed_validate_with_inline_expiry(spark, corpus, tmp_path):
     assert again["fails"] == oneshot["fails"]
     snaps = list((state).glob("snap-*.parquet"))
     assert len(snaps) <= 2
+
+
+def _copy_parts(corpus, dest, n):
+    """The first ``n`` part files of the spans corpus, copied into ``dest``."""
+    import shutil
+
+    dest.mkdir()
+    parts = sorted((corpus / "documents_spans").glob("*.parquet"))[:n]
+    for f in parts:
+        shutil.copy(f, dest / f.name)
+    return parts
+
+
+def test_empty_part_file_converges(spark, corpus, tmp_path):
+    """A zero-row part file is a listed split: it is committed as a zero-row
+    record, so the run converges (total == committed) and a rerun computes
+    nothing; the answer equals the same directory without the empty file."""
+    import pyarrow.parquet as pq
+
+    plain, with_empty = tmp_path / "plain", tmp_path / "with_empty"
+    parts = _copy_parts(corpus, plain, 3)
+    _copy_parts(corpus, with_empty, 3)
+    pq.write_table(pq.read_table(parts[0]).slice(0, 0), with_empty / "part-99999.parquet")
+
+    ref = checkpointed_validate(spark, str(plain), tmp_path / "s_plain")
+    first = checkpointed_validate(spark, str(with_empty), tmp_path / "s_empty")
+    assert first["splits_total"] == first["splits_committed"] == 4
+    assert first["splits_computed_this_run"] == 4
+    again = checkpointed_validate(spark, str(with_empty), tmp_path / "s_empty")
+    assert again["splits_total"] == again["splits_committed"] == 4
+    assert again["splits_computed_this_run"] == 0
+    for res in (first, again):
+        assert canonical_json(res["schema"]) == canonical_json(ref["schema"])
+        assert res["n_rows"] == ref["n_rows"]
+        assert res["fails"] == ref["fails"]
+    empty = [l for l in again["lineage"] if l["split"].endswith("part-99999.parquet")]
+    assert empty == [{"split": empty[0]["split"], "n_rows": 0, "passed": True}]
+
+
+def test_input_files_match_split_column(spark, tmp_path):
+    """One split identity: the file index's inputFiles() (``file:///…``),
+    normalized by split_of, equals the scan's split_column() (from
+    ``file:/…``) — on a Hive-partitioned layout whose directory and
+    partition values contain a space and a '%'."""
+    from jsons_to_schema_spark.operators.validate import split_column, split_of
+
+    out = tmp_path / "dir with space %25"
+    spark.createDataFrame(
+        [(i, f"v {i % 2}%x") for i in range(20)], "x long, p string"
+    ).write.partitionBy("p").parquet(str(out))
+    df = spark.read.parquet(str(out))
+    listed = {split_of(uri) for uri in df.inputFiles()}
+    scanned = {r[0] for r in df.select(split_column()).distinct().collect()}
+    assert len(listed) >= 2
+    assert listed == scanned
+
+
+def test_resume_reads_only_pending_files(spark, corpus, tmp_path):
+    """A resume must not open committed files: corrupt the page bytes of a
+    committed part file (footer intact, so listing and schema still work)
+    and the resume and no-op rerun still succeed with the single-shot
+    answer taken before the corruption."""
+    import pyarrow.parquet as pq
+
+    data = tmp_path / "data"
+    parts = _copy_parts(corpus, data, 6)
+    single = checkpointed_validate(spark, str(data), tmp_path / "single")
+    state = tmp_path / "state"
+    first = checkpointed_validate(spark, str(data), state, max_splits=3)
+    assert first["splits_computed_this_run"] == 3
+
+    victim = data / parts[0].name  # sorted first: committed by the K=3 run
+    assert any(l["split"].endswith(victim.name) for l in first["lineage"])
+    with open(victim, "r+b") as fh:
+        fh.seek(100)
+        fh.write(b"\0" * 4096)
+    with pytest.raises(Exception):
+        pq.read_table(victim)
+
+    resumed = checkpointed_validate(spark, str(data), state)
+    assert resumed["splits_computed_this_run"] == 3
+    noop = checkpointed_validate(spark, str(data), state)
+    assert noop["splits_computed_this_run"] == 0
+    for res in (resumed, noop):
+        assert res["splits_committed"] == 6
+        assert canonical_json(res["schema"]) == canonical_json(single["schema"])
+        assert res["fails"] == single["fails"]
+        assert res["n_rows"] == single["n_rows"]
