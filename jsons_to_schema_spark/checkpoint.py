@@ -58,6 +58,7 @@ from .schema_algebra import (
     parse_schema,
     unify_opt,
 )
+from .session import trim_worker_import_cache
 
 SPLIT_COL = "_split"
 
@@ -307,6 +308,7 @@ def _fold_split_factory(config=DEFAULT_CONFIG):
     import pyarrow.compute as pc
 
     def fold(table: pa.Table) -> pa.Table:
+        trim_worker_import_cache()
         split = table.column(SPLIT_COL)[0].as_py()
         flag_cols = {f"ok_{c}" for c in ROW_CHECKS}
         data_cols = [
@@ -333,6 +335,38 @@ def _fold_split_factory(config=DEFAULT_CONFIG):
     return fold
 
 
+def _make_agg_finalizer(specs, n_alias, config):
+    """mapInPandas body of ``_per_split_records_df``: each native agg row →
+    its split's state record (draft JSON built where the row lives)."""
+    from .operators.infer_native import finalize_agg_row
+
+    def finalize_batches(batches):
+        import pandas as pd
+
+        trim_worker_import_cache()
+        for pdf in batches:
+            rows = []
+            for rec in pdf.to_dict("records"):
+                # pandas surfaces nullable agg results as NaN; the finalizer
+                # expects SQL's None
+                rec = {
+                    k: (None if (isinstance(v, float) and pd.isna(v)) else v)
+                    for k, v in rec.items()
+                }
+                schema, n_rows = finalize_agg_row(rec, specs, n_alias, config)
+                out = {
+                    "split": rec[SPLIT_COL],
+                    "draft": canonical_json(schema),
+                    "n_rows": int(n_rows),
+                }
+                for c in ROW_CHECKS:
+                    out[f"fail_{c}"] = int(rec.get(f"fail_{c}") or 0)
+                rows.append(out)
+            yield pd.DataFrame(rows, columns=_RECORD_SCHEMA.names)
+
+    return finalize_batches
+
+
 def _per_split_records_df(df: DataFrame, flagged: DataFrame) -> DataFrame:
     """One (split, draft, n_rows, per-check fails) row per split present in
     ``flagged`` — AS A DATAFRAME, finalized on executors, never collected
@@ -350,11 +384,7 @@ def _per_split_records_df(df: DataFrame, flagged: DataFrame) -> DataFrame:
     lives.  Falls back to the grouped-Arrow fold for schema shapes the
     native builder doesn't cover.
     """
-    from .operators.infer_native import (
-        NativeInferencePlan,
-        UnsupportedSchema,
-        finalize_agg_row,
-    )
+    from .operators.infer_native import NativeInferencePlan, UnsupportedSchema
 
     data_cols = [c for c in df.columns if c != SPLIT_COL]
     try:
@@ -378,53 +408,29 @@ def _per_split_records_df(df: DataFrame, flagged: DataFrame) -> DataFrame:
     grouped = projected.groupBy(SPLIT_COL).agg(*aggs)
     specs, n_alias, config = plan.portable_finalizer()
 
-    def finalize_batches(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for rec in pdf.to_dict("records"):
-                # pandas surfaces nullable agg results as NaN; the finalizer
-                # expects SQL's None
-                rec = {
-                    k: (None if (isinstance(v, float) and pd.isna(v)) else v)
-                    for k, v in rec.items()
-                }
-                schema, n_rows = finalize_agg_row(rec, specs, n_alias, config)
-                out = {
-                    "split": rec[SPLIT_COL],
-                    "draft": canonical_json(schema),
-                    "n_rows": int(n_rows),
-                }
-                for c in ROW_CHECKS:
-                    out[f"fail_{c}"] = int(rec.get(f"fail_{c}") or 0)
-                rows.append(out)
-            yield pd.DataFrame(rows, columns=_RECORD_SCHEMA.names)
-
-    return grouped.mapInPandas(finalize_batches, _RECORD_STRUCT)
+    return grouped.mapInPandas(
+        _make_agg_finalizer(specs, n_alias, config), _RECORD_STRUCT
+    )
 
 
-def _fold_state(state_df: Optional[DataFrame]) -> dict:
-    """The whole answer from ONE pass over the state table: a mapInArrow
-    folds each partition's rows into one row (unified draft, n_rows,
-    n_splits, fail sums, lineage list) and the driver combines the
-    per-partition rows of one collect.  Null drafts (zero-row splits) add
-    lineage but no schema."""
-    fails = {c: 0 for c in ROW_CHECKS}
-    if state_df is None:
-        return {"schema": None, "n_rows": 0, "fails": fails,
-                "splits_committed": 0, "lineage": []}
-    fail_cols = [f"fail_{c}" for c in ROW_CHECKS if f"fail_{c}" in state_df.columns]
+def _state_fold_schema(fail_cols: list[str]) -> pa.Schema:
     lineage_type = pa.list_(
         pa.struct([("split", pa.string()), ("n_rows", pa.int64()), ("passed", pa.bool_())])
     )
-    out_schema = pa.schema(
+    return pa.schema(
         [("draft", pa.string()), ("n_rows", pa.int64()), ("n_splits", pa.int64())]
         + [(c, pa.int64()) for c in fail_cols]
         + [("lineage", lineage_type)]
     )
 
+
+def _make_state_fold(fail_cols: list[str]):
+    """mapInArrow body of ``_fold_state``: one partition of state records →
+    one row (unified draft, n_rows, n_splits, fail sums, lineage list)."""
+    out_schema = _state_fold_schema(fail_cols)
+
     def fold(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        trim_worker_import_cache()
         acc: Optional[Schema] = None
         out = {"n_rows": 0, **{c: 0 for c in fail_cols}}
         lineage = []
@@ -446,9 +452,26 @@ def _fold_state(state_df: Optional[DataFrame]) -> dict:
         out["lineage"] = lineage
         yield pa.RecordBatch.from_pylist([out], schema=out_schema)
 
+    return fold
+
+
+def _fold_state(state_df: Optional[DataFrame]) -> dict:
+    """The whole answer from ONE pass over the state table: a mapInArrow
+    folds each partition's rows into one row (unified draft, n_rows,
+    n_splits, fail sums, lineage list) and the driver combines the
+    per-partition rows of one collect.  Null drafts (zero-row splits) add
+    lineage but no schema."""
+    fails = {c: 0 for c in ROW_CHECKS}
+    if state_df is None:
+        return {"schema": None, "n_rows": 0, "fails": fails,
+                "splits_committed": 0, "lineage": []}
+    fail_cols = [f"fail_{c}" for c in ROW_CHECKS if f"fail_{c}" in state_df.columns]
     parts = (
         state_df.select("split", "draft", "n_rows", *fail_cols)
-        .mapInArrow(fold, from_arrow_schema(out_schema))
+        .mapInArrow(
+            _make_state_fold(fail_cols),
+            from_arrow_schema(_state_fold_schema(fail_cols)),
+        )
         .collect()
     )
     schema: Optional[Schema] = None

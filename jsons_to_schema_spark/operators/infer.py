@@ -10,10 +10,16 @@ unifySchemas``) as idiomatic Spark:
     unification U0-U8 in one walk per document), and the batch drafts unify
     to ONE draft per partition.  Output: a tiny DataFrame of (draft json,
     doc count) — one row per non-empty partition.
-2.  ``RDD.treeAggregate`` over those partials — a logarithmic merge tree so
-    the driver never sees more than a handful of accumulators at once.  Legal
+2.  The partials merge on the driver: a plain ``collect()`` of the
+    KB-scale rows at up to 256 partials (no Python worker runs for it), and
+    ``RDD.treeAggregate`` above that — a logarithmic merge tree so the
+    driver never sees more than a handful of accumulators at once.  Legal
     because unify is associative + commutative (property-tested); this is the
     direct analog of the reference's fold, parallelized.
+
+Every worker-side function here starts with
+``session.trim_worker_import_cache()``, so a Python worker pays pyspark's
+per-task import setup about once per process, not once per task.
 
 Two front-ends:
 
@@ -51,6 +57,7 @@ from ..schema_algebra import (
     unify,
     unify_opt,
 )
+from ..session import trim_worker_import_cache
 
 PARTIAL_SCHEMA = "draft string, n_docs long"
 
@@ -339,6 +346,7 @@ def _partial_batch(draft: Optional[Schema], n: int) -> Iterator[pa.RecordBatch]:
 
 def _make_json_accumulator(col: str, config: SchemaGenerationConfig, on_error: str):
     def accumulate(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        trim_worker_import_cache()
         acc: Optional[Schema] = None
         n = 0
         for batch in batches:
@@ -352,6 +360,7 @@ def _make_json_accumulator(col: str, config: SchemaGenerationConfig, on_error: s
 
 def _make_struct_accumulator(config: SchemaGenerationConfig):
     def accumulate(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        trim_worker_import_cache()
         acc: Optional[Schema] = None
         n = 0
         for batch in batches:
@@ -366,47 +375,57 @@ def _make_struct_accumulator(config: SchemaGenerationConfig):
 # Merge (treeAggregate) + public API
 # ---------------------------------------------------------------------------
 
-def _tree_merge(partials: DataFrame) -> tuple[Optional[Schema], int]:
-    """Merge of per-partition (draft, count) rows.
+def _tree_merge(partials: DataFrame, n_parts: int) -> tuple[Optional[Schema], int]:
+    """Merge of per-partition (draft, count) rows; ``n_parts`` is the input's
+    partition count, which ``mapInArrow`` keeps.
 
-    At 10^5+ partitions a treeAggregate keeps every merge fan-in bounded
-    instead of funneling all partials straight to the driver; below a few
-    hundred partials (one KB-scale row each) the tree's extra stage costs
-    more than it saves, so the driver folds a plain collect() — same
-    associative fold, one fewer job.
+    Up to 256 partials (one KB-scale row each) the driver folds a plain
+    DataFrame ``collect()``: the JVM serializes the rows, so no Python worker
+    runs for the merge.  At 10^5+ partitions a treeAggregate keeps every
+    merge fan-in bounded instead of funneling all partials straight to the
+    driver — same associative fold.
     """
-    rdd = partials.rdd.map(lambda r: (r["draft"], int(r["n_docs"])))
-    n_parts = max(1, rdd.getNumPartitions())
     if n_parts <= 256:
         acc: Optional[Schema] = None
         n = 0
-        for draft, k in rdd.collect():
-            acc = unify_opt(acc, parse_schema(draft))
-            n += k
+        for r in partials.collect():
+            acc = unify_opt(acc, parse_schema(r["draft"]))
+            n += r["n_docs"]
         return acc, n
-    depth = max(2, int(np.ceil(np.log(max(n_parts, 2)) / np.log(4))))
-
-    def seq(acc, item):
-        draft, n = item
-        return (unify_opt(acc[0], parse_schema(draft)), acc[1] + n)
-
-    def comb(a, b):
-        return (unify_opt(a[0], b[0]), a[1] + b[1])
-
-    schema, n_docs = rdd.treeAggregate((None, 0), seq, comb, depth=depth)
+    depth = max(2, int(np.ceil(np.log(n_parts) / np.log(4))))
+    rdd = partials.rdd.map(lambda r: (r["draft"], int(r["n_docs"])))
+    schema, n_docs = rdd.treeAggregate(
+        (None, 0), _merge_seq, _merge_comb, depth=depth
+    )
     return schema, n_docs
 
 
-def _ensure_parallelism(df: DataFrame) -> DataFrame:
+def _merge_seq(acc, item):
+    """treeAggregate seqOp: fold one (draft json, count) partial."""
+    trim_worker_import_cache()
+    draft, n = item
+    return (unify_opt(acc[0], parse_schema(draft)), acc[1] + n)
+
+
+def _merge_comb(a, b):
+    """treeAggregate combOp: unify two (schema, count) accumulators."""
+    trim_worker_import_cache()
+    return (unify_opt(a[0], b[0]), a[1] + b[1])
+
+
+def _ensure_parallelism(df: DataFrame) -> tuple[DataFrame, int]:
     """The Python fold's cost is per document, not per byte — a small input
     file must not serialize the fold onto one worker.  If the scan yields
     fewer partitions than default parallelism, shuffle the (already
     column-pruned) input out to the cores; the shuffle moves only the column
-    being folded and is legal because unify is order-insensitive."""
+    being folded and is legal because unify is order-insensitive.
+
+    Returns the DataFrame and its partition count, planned once here."""
     target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target)
-    return df
+    n_parts = df.rdd.getNumPartitions()
+    if n_parts < target:
+        return df.repartition(target), target
+    return df, n_parts
 
 
 def infer_from_json_column(
@@ -420,10 +439,11 @@ def infer_from_json_column(
 
     on_error: 'fail' raises a clear error naming the bad document;
     'skip' drops undecodable documents (they are excluded from the count)."""
-    partials = _ensure_parallelism(df.select(column)).mapInArrow(
+    src, n_parts = _ensure_parallelism(df.select(column))
+    partials = src.mapInArrow(
         _make_json_accumulator(column, config, on_error), PARTIAL_SCHEMA
     )
-    schema, n = _tree_merge(partials)
+    schema, n = _tree_merge(partials, n_parts)
     if schema is None:
         raise ValueError("infer_from_json_column: no documents (reference takes NonEmpty)")
     return schema, n
@@ -457,10 +477,9 @@ def infer_from_struct(
         except UnsupportedSchema:
             if engine == "native":
                 raise
-    partials = _ensure_parallelism(df).mapInArrow(
-        _make_struct_accumulator(config), PARTIAL_SCHEMA
-    )
-    schema, n = _tree_merge(partials)
+    src, n_parts = _ensure_parallelism(df)
+    partials = src.mapInArrow(_make_struct_accumulator(config), PARTIAL_SCHEMA)
+    schema, n = _tree_merge(partials, n_parts)
     if schema is None:
         raise ValueError("infer_from_struct: no rows (reference takes NonEmpty)")
     return schema, n
@@ -472,6 +491,45 @@ def infer_as_dataframe(spark: SparkSession, schema: Schema, n_docs: int) -> Data
         [Row(unified_schema=canonical_json(schema), n_docs=n_docs)],
         "unified_schema string, n_docs long",
     )
+
+
+def _group_row(group_col: str, key, acc: Optional[Schema], n: int):
+    import pandas as pd
+
+    return pd.DataFrame(
+        {
+            group_col: [key],
+            "unified_schema": [canonical_json(acc) if acc is not None else None],
+            "n_docs": [n],
+        }
+    )
+
+
+def _make_group_fold(group_col: str, json_col: str, config, on_error: str):
+    def fold(pdf):
+        trim_worker_import_cache()
+        texts = pa.array(pdf[json_col], type=pa.string())
+        acc, n = _batch_to_draft_json(
+            pa.RecordBatch.from_arrays([texts], [json_col]), json_col, config, on_error
+        )
+        return _group_row(group_col, pdf[group_col].iloc[0], acc, n)
+
+    return fold
+
+
+def _make_group_merge(group_col: str):
+    def merge(pdf):
+        trim_worker_import_cache()
+        acc: Optional[Schema] = None
+        n = 0
+        for s, k in zip(pdf["unified_schema"], pdf["n_docs"]):
+            if s is None:
+                continue
+            acc = unify_opt(acc, parse_schema(s))
+            n += int(k)
+        return _group_row(group_col, pdf[group_col].iloc[0], acc, n)
+
+    return merge
 
 
 def infer_grouped(
@@ -496,24 +554,10 @@ def infer_grouped(
     infer_from_json_column: 'fail' raises naming the bad document, 'skip'
     drops it.
     """
-    import pandas as pd
-
     if on_error not in ("fail", "skip"):
         raise ValueError(f"on_error must be 'fail' or 'skip', got {on_error!r}")
 
-    def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        texts = pa.array(pdf[json_col], type=pa.string())
-        acc, n = _batch_to_draft_json(
-            pa.RecordBatch.from_arrays([texts], [json_col]), json_col, config, on_error
-        )
-        return pd.DataFrame(
-            {
-                group_col: [pdf[group_col].iloc[0]],
-                "unified_schema": [canonical_json(acc) if acc is not None else None],
-                "n_docs": [n],
-            }
-        )
-
+    fold = _make_group_fold(group_col, json_col, config, on_error)
     key_type = df.schema[group_col].dataType.simpleString()
     out_schema = f"{group_col} {key_type}, unified_schema string, n_docs long"
     src = df.select(group_col, json_col)
@@ -529,23 +573,9 @@ def infer_grouped(
         )
     )
 
-    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        acc: Optional[Schema] = None
-        n = 0
-        for s, k in zip(pdf["unified_schema"], pdf["n_docs"]):
-            if s is None:
-                continue
-            acc = unify_opt(acc, parse_schema(s))
-            n += int(k)
-        return pd.DataFrame(
-            {
-                group_col: [pdf[group_col].iloc[0]],
-                "unified_schema": [canonical_json(acc) if acc is not None else None],
-                "n_docs": [n],
-            }
-        )
-
-    return partials.groupBy(group_col).applyInPandas(merge, out_schema)
+    return partials.groupBy(group_col).applyInPandas(
+        _make_group_merge(group_col), out_schema
+    )
 
 
 def apply_schema(df: DataFrame, json_col: str, schema) -> DataFrame:

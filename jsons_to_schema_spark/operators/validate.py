@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..schema_algebra import Schema, validate as validate_value
+from ..session import trim_worker_import_cache
 
 # ---------------------------------------------------------------------------
 # Span-level constraint checks (pure Catalyst expressions).  Column factories,
@@ -368,25 +369,15 @@ def validate_spans(
 # Schema-conformance validation (reference V1) — broadcast schema, Arrow batch
 # ---------------------------------------------------------------------------
 
-def validate_json_against_schema(
-    df: DataFrame, column: str, schema: Schema
-) -> DataFrame:
-    """Per-document verdicts of a JSON-string column against a Draft-4
-    schema.  The schema rides to executors inside the serialized closure
-    (KB-scale — the broadcast analog); verdicts are computed batch-at-a-time
-    in Arrow.  Returns (doc json, valid boolean, errors array<string>).
-    """
-    # inline local $refs ONCE here, not per document in the hot loop
-    from ..schema_algebra import _has_ref, resolve_refs
-
-    if _has_ref(schema):
-        schema = resolve_refs(schema)
-    schema_blob = json.dumps(schema)
+def _make_verdicts(column: str, schema_blob: str):
+    """mapInArrow body of ``validate_json_against_schema``: a batch of JSON
+    documents → (doc, valid, errors) verdict rows, one per input row."""
     out_schema = pa.schema(
         [("doc", pa.string()), ("valid", pa.bool_()), ("errors", pa.list_(pa.string()))]
     )
 
     def verdicts(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        trim_worker_import_cache()
         sch = json.loads(schema_blob)
         for batch in batches:
             docs, valids, errs = [], [], []
@@ -415,8 +406,26 @@ def validate_json_against_schema(
                     {"doc": docs, "valid": valids, "errors": errs}, schema=out_schema
                 )
 
+    return verdicts
+
+
+def validate_json_against_schema(
+    df: DataFrame, column: str, schema: Schema
+) -> DataFrame:
+    """Per-document verdicts of a JSON-string column against a Draft-4
+    schema.  The schema rides to executors inside the serialized closure
+    (KB-scale — the broadcast analog); verdicts are computed batch-at-a-time
+    in Arrow.  Returns (doc json, valid boolean, errors array<string>).
+    """
+    # inline local $refs ONCE here, not per document in the hot loop
+    from ..schema_algebra import _has_ref, resolve_refs
+
+    if _has_ref(schema):
+        schema = resolve_refs(schema)
+    schema_blob = json.dumps(schema)
     return df.select(column).mapInArrow(
-        verdicts, "doc string, valid boolean, errors array<string>"
+        _make_verdicts(column, schema_blob),
+        "doc string, valid boolean, errors array<string>",
     )
 
 

@@ -16,6 +16,7 @@ rounded).  With that, the gate covers ALL queries: the round-9 parity
 test remains only for its order-sensitive column-name check."""
 
 import math
+from collections import Counter
 from decimal import Decimal as _Decimal
 
 import duckdb
@@ -69,6 +70,26 @@ def _canon(cols, rows):
     )
 
 
+def _hashable(v):
+    if isinstance(v, (list, tuple)):
+        return tuple(_hashable(x) for x in v)
+    if isinstance(v, dict):
+        return tuple(sorted((k, _hashable(x)) for k, x in v.items()))
+    return v
+
+
+def _multiset_diff(name, sr, dr):
+    """Failure message: the rows each side has that the other lacks, as
+    multisets — a positional zip reports every row after one missing row."""
+    s, d = Counter(map(_hashable, sr)), Counter(map(_hashable, dr))
+    only_s, only_d = s - d, d - s
+    return (
+        f"{name}: {sum(only_s.values())} rows only in Spark, first: "
+        f"{list(only_s)[:3]}; {sum(only_d.values())} rows only in the oracle, "
+        f"first: {list(only_d)[:3]}"
+    )
+
+
 ALL_QUERIES = list(entry_mod.queries().keys())
 WINDOW = ALL_QUERIES[:50]
 
@@ -93,7 +114,4 @@ def test_driver_window_exact(spark, con, name):
     dc, dr = _canon(d_cols, d_rows)
     assert sc == dc, f"{name}: column mismatch {sc} vs {dc}"
     assert len(sr) == len(dr), f"{name}: row count {len(sr)} vs {len(dr)}"
-    bad = [
-        (i, a, b) for i, (a, b) in enumerate(zip(sr, dr)) if a != b
-    ]
-    assert not bad, f"{name}: {len(bad)} exact-value diffs; first: {bad[:3]}"
+    assert sr == dr, _multiset_diff(name, sr, dr)
